@@ -19,7 +19,7 @@ import pytest
 from tests.ws_server import RecordingWsServer
 from ws_to_kafka_spark.config import PipelineConfig
 from ws_to_kafka_spark.sources.ws_client import WsClient
-from ws_to_kafka_spark.sources.websocket import _FeedWorker
+from ws_to_kafka_spark.sources.websocket import _FeedBlobSlice, _start_worker
 from ws_to_kafka_spark.streaming import start_pipeline
 from ws_to_kafka_spark.streaming.observability import PipelineListener
 
@@ -31,6 +31,46 @@ def wait_until(cond, timeout=15.0, step=0.1):
             return True
         time.sleep(step)
     return False
+
+
+def _is_descendant(pid: int, ancestor: int) -> bool:
+    # walk the ppid chain so a PARALLEL session's feed children are never
+    # touched (ADVICE r10: a machine-wide cmdline match would SIGKILL or
+    # count another test run's or a concurrent bench's decoders)
+    while pid > 1:
+        try:
+            with open(f"/proc/{pid}/stat", "rb") as fh:
+                # field 4 is ppid; comm (field 2) may contain spaces but
+                # is parenthesized — split after ')'
+                pid = int(fh.read().rsplit(b")", 1)[1].split()[1])
+        except OSError:
+            return False
+        if pid == ancestor:
+            return True
+    return False
+
+
+def _feed_proc_pids() -> set[int]:
+    """Live feed_proc children descended from this test process, found by
+    cmdline (never pkill -f: the pattern must not match this process)."""
+    import os
+
+    me = os.getpid()
+    pids = set()
+    for entry in os.listdir("/proc"):
+        if not entry.isdigit():
+            continue
+        try:
+            with open(f"/proc/{entry}/cmdline", "rb") as fh:
+                argv = fh.read().split(b"\0")
+        except OSError:
+            continue
+        if (
+            b"ws_to_kafka_spark.sources.feed_proc" in argv
+            and _is_descendant(int(entry), me)
+        ):
+            pids.add(int(entry))
+    return pids
 
 
 # ---------------------------------------------------------------------------
@@ -127,21 +167,22 @@ def test_concurrent_writes_do_not_interleave():
         server.close()
 
 
+def _buffered_values(worker) -> list[bytes]:
+    """Every frame the worker still retains, in index order."""
+    nxt, lo = worker.peek()
+    part = _FeedBlobSlice(0, lo, nxt, worker.batches_between(lo, nxt))
+    return [value for value, _, _ in part.rows_iter()]
+
+
 def test_feed_worker_reconnects_and_resubscribes():
-    """Abrupt drop after 1 frame → worker must redial and re-send the
-    subscription (reference re-subscribes on every reconnect)."""
+    """Abrupt drop after 1 frame → the feed child must redial and re-send
+    the subscription (reference re-subscribes on every reconnect)."""
     server = RecordingWsServer(
         frames_per_connection=[b"a", b"b"], drop_after_frames=1
     )
-    worker = _FeedWorker(
-        url=server.url,
-        subscribe="SUB",
-        interval_seconds=0.0,
-        interval_messages=(),
-        reconnect_delay=0.2,  # keep the test fast; production default is 5 s
-    )
+    # keep the test fast; production default reconnect_delay is 5 s
+    worker = _start_worker({"reconnect_delay": "0.2"}, server.url, "SUB")
     try:
-        worker.start()
         assert wait_until(lambda: server.connections >= 2), "no reconnect"
         # the re-subscribe must arrive on the RECONNECT connection; the
         # dropped first connection's SUB may be lost to the close/reader
@@ -155,7 +196,7 @@ def test_feed_worker_reconnects_and_resubscribes():
         # unread bytes) — that loss is the documented at-most-once window
         # (reference drops frames during reconnect too, wsclient.hpp:158-162).
         assert wait_until(
-            lambda: [r.value for r in worker.snapshot(0)[0]][-2:] == [b"a", b"b"]
+            lambda: _buffered_values(worker)[-2:] == [b"a", b"b"]
         )
     finally:
         worker.stop()
@@ -169,16 +210,13 @@ def test_idle_feed_stays_connected():
     src/wsclient.hpp:20,141-142). A regression here duplicates every
     frame on idle streams via redial."""
     server = RecordingWsServer(frames_per_connection=[b"early"])
-    worker = _FeedWorker(
-        url=server.url, subscribe=None, interval_seconds=0.0, interval_messages=()
-    )
+    worker = _start_worker({}, server.url, None)
     try:
-        worker.start()
-        assert wait_until(lambda: len(worker.snapshot(0)[0]) == 1)
+        assert wait_until(lambda: _buffered_values(worker) == [b"early"])
         time.sleep(12)  # cross the idle-timeout boundary
         server.push_frame(b"late")
         assert wait_until(
-            lambda: [r.value for r in worker.snapshot(0)[0]] == [b"early", b"late"]
+            lambda: _buffered_values(worker) == [b"early", b"late"]
         ), "late frame lost or duplicated after idle interval"
         assert server.connections == 1, "client redialed a healthy idle feed"
     finally:
@@ -188,14 +226,12 @@ def test_idle_feed_stays_connected():
 
 def test_interval_messages_resent_periodically():
     server = RecordingWsServer()
-    worker = _FeedWorker(
-        url=server.url,
-        subscribe=None,
-        interval_seconds=0.15,
-        interval_messages=("T1", "T2"),
+    worker = _start_worker(
+        {"interval": "0.15", "interval_messages": json.dumps(["T1", "T2"])},
+        server.url,
+        None,
     )
     try:
-        worker.start()
         assert wait_until(lambda: server.received.count(b"T1") >= 2)
         assert server.received.count(b"T2") >= 1
         # fixed-rate ordering: T1 always precedes T2 within a burst
@@ -204,6 +240,58 @@ def test_interval_messages_resent_periodically():
     finally:
         worker.stop()
         server.close()
+
+
+def test_websocket_reader_read_matches_replay():
+    """The simple reader's two frame paths agree: ``read`` (Arrow batches
+    for the prefetch runner, capped by ``max_records_per_batch``) and
+    ``readBetweenOffsets`` (the retention-cache replay) return the same
+    frames for the same offsets, in the source's two-column schema."""
+    from ws_to_kafka_spark.sources.websocket import WebSocketStreamReader
+
+    frames = [f"r-{i}".encode() for i in range(5)]
+    server = RecordingWsServer(frames_per_connection=frames)
+    reader = WebSocketStreamReader(
+        {"url": server.url, "max_records_per_batch": "3"}
+    )
+    try:
+        reader.read({"index": 0})  # dials the feed
+        assert wait_until(lambda: reader._worker.peek()[0] >= len(frames))
+        it, end = reader.read({"index": 0})
+        assert end == {"index": 3}
+        batches = list(it)
+        assert all(b.schema.names == ["value", "ws_timestamp"] for b in batches)
+        read_rows = [
+            (v, t) for b in batches for v, t in zip(*b.to_pydict().values())
+        ]
+        replay = list(reader.readBetweenOffsets({"index": 0}, end))
+        assert [v for v, _ in replay] == [v for v, _ in read_rows] == frames[:3]
+        assert [t for _, t in replay] == [t for _, t in read_rows]
+        it, end = reader.read(end)
+        assert end == {"index": 5}
+        reader.commit(end)
+        assert list(reader.readBetweenOffsets({"index": 0}, end)) == []
+    finally:
+        reader.stop()
+        server.close()
+
+
+def test_feed_proc_child_stderr_is_inherited(capfd):
+    """The feed child inherits its parent's stderr: the traceback its
+    redial loop prints for a non-WsError (here an unparseable URL) must
+    reach fd 2 instead of vanishing."""
+    worker = _start_worker({"reconnect_delay": "0.2"}, "not a url", None)
+    err: list[str] = []
+
+    def saw_traceback() -> bool:
+        err.append(capfd.readouterr().err)
+        return "Traceback" in "".join(err)
+
+    try:
+        assert wait_until(saw_traceback), "child traceback never reached fd 2"
+        assert "unparseable uri" in "".join(err)
+    finally:
+        worker.stop()
 
 
 # ---------------------------------------------------------------------------
@@ -254,10 +342,14 @@ def test_pipeline_end_to_end_memory_sink(spark, tmp_path, event_frames):
         assert wait_until(lambda: listener.rows_seen >= 12, timeout=30)
         # subscribe reached the server before any frame
         assert server.received[0] == b'{"action":"subscribe"}'
+        assert _feed_proc_pids(), "no feed_proc child owns the connection"
     finally:
         query.stop()
         spark.streams.removeListener(listener)
         server.close()
+    assert wait_until(lambda: not _feed_proc_pids(), timeout=15), (
+        f"feed_proc children leaked after stop: {_feed_proc_pids()}"
+    )
 
 
 def test_binary_frames_survive_byte_for_byte(spark, tmp_path):
@@ -1236,16 +1328,12 @@ def test_max_records_per_batch_caps_microbatches(spark, tmp_path):
 # Multi-connection source: N sockets -> N input partitions
 # ---------------------------------------------------------------------------
 
-@pytest.mark.parametrize("reader_mode", ["process", "thread"])
-def test_websocket_multi_two_feeds_land_in_order(spark, tmp_path, reader_mode):
+def test_websocket_multi_two_feeds_land_in_order(spark, tmp_path):
     """Two independent ws servers through one `websocket_multi` stream:
     every frame from BOTH feeds must land tagged with its feed_id, each
     feed's frames must arrive in per-feed connection order, and each
     (batch, feed) slice must occupy its own input partition — the
-    N-sockets ⇒ N-partitions claim (round-8 VERDICT item 2).  Runs in
-    BOTH reader modes: the round-10 default (subprocess decode, blob
-    slices unpacked executor-side) and the in-process thread fallback —
-    identical observable contract."""
+    N-sockets ⇒ N-partitions claim (round-8 VERDICT item 2)."""
     import json as _json
 
     from pyspark.sql import functions as F
@@ -1262,9 +1350,8 @@ def test_websocket_multi_two_feeds_land_in_order(spark, tmp_path, reader_mode):
     stream = (
         spark.readStream.format("websocket_multi")
         .option("urls", _json.dumps([server_a.url, server_b.url]))
-        .option("reader_mode", reader_mode)
         # cap admission to 2 frames/feed/batch so each feed spans >=4
-        # batches: without it, process-mode child-spawn stagger under
+        # batches: without it, child-spawn stagger under
         # suite load can drain one feed entirely before the other's
         # first frame, leaving NO batch with both feeds — and the
         # partition-isolation assertion below needs one (full-suite
@@ -1451,46 +1538,9 @@ def test_websocket_multi_child_process_crash_respawns(spark, tmp_path):
             timeout=60,
         )
         # the reader lives in Spark's python-source worker process, so
-        # locate its child decoder by cmdline (never pkill -f: the
-        # pattern must not match this test's own process) and kill it
+        # locate its child decoder by cmdline and kill it
         import os
         import signal
-
-        def _is_descendant(pid: int, ancestor: int) -> bool:
-            # walk the ppid chain so a PARALLEL session's feed children
-            # are never touched (ADVICE r10: a machine-wide cmdline
-            # match would SIGKILL another test run's or a concurrent
-            # bench's decoders)
-            while pid > 1:
-                try:
-                    with open(f"/proc/{pid}/stat", "rb") as fh:
-                        # field 4 is ppid; comm (field 2) may contain
-                        # spaces but is parenthesized — split after ')'
-                        pid = int(fh.read().rsplit(b")", 1)[1].split()[1])
-                except OSError:
-                    return False
-                if pid == ancestor:
-                    return True
-            return False
-
-        me = os.getpid()
-
-        def _feed_proc_pids() -> set[int]:
-            pids = set()
-            for entry in os.listdir("/proc"):
-                if not entry.isdigit():
-                    continue
-                try:
-                    with open(f"/proc/{entry}/cmdline", "rb") as fh:
-                        argv = fh.read().split(b"\0")
-                except OSError:
-                    continue
-                if (
-                    b"ws_to_kafka_spark.sources.feed_proc" in argv
-                    and _is_descendant(int(entry), me)
-                ):
-                    pids.add(int(entry))
-            return pids
 
         before = _feed_proc_pids()
         assert before, "no feed_proc child found — process mode not active"
@@ -1524,43 +1574,10 @@ def test_websocket_multi_no_child_leak_after_stop(spark, tmp_path):
     fallback, the pump reaps its own last spawn, and PR_SET_PDEATHSIG
     covers a crashed driver."""
     import json as _json
-    import os
 
     from ws_to_kafka_spark.sources.websocket import (
         register_websocket_multi_source,
     )
-
-    def _is_descendant(pid: int, ancestor: int) -> bool:
-        # session-scoped (ADVICE r10): a concurrent session's live feed
-        # children must not fail THIS session's leak assertion
-        while pid > 1:
-            try:
-                with open(f"/proc/{pid}/stat", "rb") as fh:
-                    pid = int(fh.read().rsplit(b")", 1)[1].split()[1])
-            except OSError:
-                return False
-            if pid == ancestor:
-                return True
-        return False
-
-    me = os.getpid()
-
-    def feed_proc_pids() -> set[int]:
-        pids = set()
-        for entry in os.listdir("/proc"):
-            if not entry.isdigit():
-                continue
-            try:
-                with open(f"/proc/{entry}/cmdline", "rb") as fh:
-                    argv = fh.read()
-            except OSError:
-                continue
-            if (
-                b"ws_to_kafka_spark.sources.feed_proc" in argv
-                and _is_descendant(int(entry), me)
-            ):
-                pids.add(int(entry))
-        return pids
 
     frames = [f"l-{i}".encode() for i in range(4)]
     server = RecordingWsServer(frames_per_connection=frames)
@@ -1580,12 +1597,12 @@ def test_websocket_multi_no_child_leak_after_stop(spark, tmp_path):
             >= len(frames),
             timeout=60,
         )
-        assert feed_proc_pids(), "process mode did not spawn a child"
+        assert _feed_proc_pids(), "no feed_proc child was spawned"
     finally:
         query.stop()
         server.close()
-    assert wait_until(lambda: not feed_proc_pids(), timeout=15), (
-        f"feed_proc children leaked after stop: {feed_proc_pids()}"
+    assert wait_until(lambda: not _feed_proc_pids(), timeout=15), (
+        f"feed_proc children leaked after stop: {_feed_proc_pids()}"
     )
 
 
@@ -1642,6 +1659,12 @@ def test_transform_with_state_checkpoint_restart(spark, tmp_path):
             assert wait_until(
                 lambda: latest == {0: (2, 4.0), 1: (1, 2.0)}, timeout=60
             ), f"phase A never landed: {latest}"
+            # the sink sees a batch a few ms before its commit-log entry is
+            # written; a stop inside that window leaves the batch to be
+            # replayed on restart, and a socket source replays nothing
+            # (at-most-once), so phase A's state would be rebuilt empty.
+            # The restart under test is from a committed phase A.
+            query.processAllAvailable()
         finally:
             query.stop()
 
@@ -1770,8 +1793,9 @@ def test_feed_blob_slice_offset_bound_enforced(monkeypatch):
     is injected scaled-down so the test runs on bytes, not gigabytes."""
     import struct
 
+    import numpy as np
+
     from ws_to_kafka_spark.sources import websocket as ws_mod
-    from ws_to_kafka_spark.sources.websocket import _FeedBlobSlice
 
     def pack(payloads):
         return b"".join(
@@ -1786,6 +1810,16 @@ def test_feed_blob_slice_offset_bound_enforced(monkeypatch):
     monkeypatch.setattr(ws_mod, "_BIN_OFFSET_MAX", 8)
     with pytest.raises(ValueError, match="offset bound"):
         list(part.batches_iter())
+    # the bound is checked BEFORE the payload gather allocates: with the
+    # gather disabled, the same error must still come out
+    with monkeypatch.context() as m:
+
+        def no_gather(*args, **kwargs):
+            raise AssertionError("payload gather ran before the bound check")
+
+        m.setattr(np, "repeat", no_gather)
+        with pytest.raises(ValueError, match="offset bound"):
+            list(part.batches_iter())
     # exactly AT the bound is fine (offsets fit), and values are intact
     monkeypatch.setattr(ws_mod, "_BIN_OFFSET_MAX", 9)
     got = list(part.batches_iter())
@@ -1796,14 +1830,13 @@ def test_feed_proc_pack_frames_bit_identical():
     """Round-14 pin (VERDICT r13 item 2): the child's vectorized flush
     packing (``feed_proc.pack_frames`` — numpy structured headers + one
     C-level join) must produce the BYTE-IDENTICAL wire body as the old
-    per-frame ``struct.pack("<QI", ts, len) + payload`` loop, on both
-    sides of the small-batch dispatch threshold, and the executor's
-    ``_FeedBlobSlice`` must round-trip it losslessly."""
+    per-frame ``struct.pack("<QI", ts, len) + payload`` loop for every
+    flush size, and ``_FeedBlobSlice`` must round-trip it losslessly."""
     import struct
     from datetime import timedelta
 
     from ws_to_kafka_spark.sources import feed_proc
-    from ws_to_kafka_spark.sources.websocket import _EPOCH_UTC, _FeedBlobSlice
+    from ws_to_kafka_spark.sources.websocket import _EPOCH_UTC
 
     def reference(frames):
         return b"".join(
@@ -1813,15 +1846,15 @@ def test_feed_proc_pack_frames_bit_identical():
     cases = {
         "empty": [],
         "single": [(1_700_000_000_000_001, b"")],
-        # below the vectorized threshold: plain loop path
+        # an idle feed's flush: a handful of frames
         "small": [
             (1_700_000_000_000_000 + i, bytes([i % 251]) * (i % 7))
-            for i in range(feed_proc._PACK_VEC_MIN - 1)
+            for i in range(31)
         ],
-        # above it: numpy path, mixed sizes incl. zero-length payloads
+        # a busy feed's flush, mixed sizes incl. zero-length payloads
         "large": [
             (2_000_000_000_000_000 + 37 * i, (b"%d|" % i) * (i % 29))
-            for i in range(5 * feed_proc._PACK_VEC_MIN)
+            for i in range(160)
         ],
     }
     for name, frames in cases.items():

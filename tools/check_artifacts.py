@@ -1,5 +1,9 @@
-"""Commit-time guard: the newest VERIFY_r{N}.json must cover the registry
-EXACTLY — one entry per registered query, no extras.
+"""Commit-time guard: the per-query oracle artifact ``VERIFY_REGISTRY.json``
+must cover the registry EXACTLY — one entry per registered query, no extras.
+
+The artifact has a fixed name that no round-end tooling writes: the
+r-numbered ``VERIFY_r{N}.json`` files belong to the round-end gate summary,
+which twice overwrote the newest one with a different format.
 
 tests/test_queries.py::test_verify_artifact_covers_registry enforces the
 same invariant in the suite, but twice now (rounds 4 and 5) a query was
@@ -15,7 +19,6 @@ Exit 0 = consistent; exit 1 prints the drift and the regeneration command.
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import re
@@ -26,15 +29,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
-def latest_artifact() -> str:
-    arts = glob.glob(os.path.join(REPO, "VERIFY_r*.json"))
-    if not arts:
-        print("check_artifacts: no VERIFY_r{N}.json present", file=sys.stderr)
-        sys.exit(1)
-    return max(
-        arts,
-        key=lambda p: int(re.search(r"_r(\d+)", os.path.basename(p)).group(1)),
-    )
+#: The per-query oracle artifact (tools/verify_queries.py --json).
+ARTIFACT = os.path.join(REPO, "VERIFY_REGISTRY.json")
 
 
 def artifact_keys(path: str, staged: bool) -> set[str]:
@@ -130,7 +126,10 @@ def main() -> None:
         warn_unstaged_operators()
     from ws_to_kafka_spark.operators import QUERIES
 
-    path = latest_artifact()
+    path = ARTIFACT
+    if not os.path.exists(path):
+        print(f"check_artifacts: no {os.path.basename(path)} present", file=sys.stderr)
+        sys.exit(1)
     have = artifact_keys(path, staged)
     want = set(QUERIES)
     missing, extra = sorted(want - have), sorted(have - want)

@@ -3,7 +3,7 @@
 #   sh tools/install_hooks.sh
 #
 # pre-commit: when a commit touches the operator registry or a VERIFY
-# artifact, require the STAGED newest VERIFY_r{N}.json to cover the
+# artifact, require the STAGED VERIFY_REGISTRY.json to cover the
 # registry exactly (tools/check_artifacts.py) — the round-4/round-5
 # "registered a query, forgot the artifact" drift becomes un-committable.
 set -e
@@ -17,7 +17,7 @@ python tools/check_artifacts.py --orphans || {
     echo "pre-commit: orphaned round artifacts (see above)" >&2
     exit 1
 }
-if git diff --cached --name-only | grep -qE '^(ws_to_kafka_spark/operators/|VERIFY_r)'; then
+if git diff --cached --name-only | grep -qE '^(ws_to_kafka_spark/operators/|VERIFY_REGISTRY)'; then
     python tools/check_artifacts.py --staged || {
         echo "pre-commit: VERIFY artifact out of sync with registry (see above)" >&2
         exit 1

@@ -143,8 +143,8 @@ def _graph_ann_split(spark, sf_dir: str) -> dict:
 
     Caches are cleared at ENTRY so the build numbers are COLD-measured
     regardless of caller — without this, sf1_bench's split (running
-    after _time_all warmed the per-corpus index caches) and
-    patch_sf_split's (fresh session) were not like-for-like, and
+    after _time_all warmed the per-corpus index caches) and a
+    fresh-session re-measure were not like-for-like, and
     build_sec could shift across rounds from cache state rather than
     code."""
     from pyspark.sql import functions as F

@@ -127,7 +127,7 @@ def evict_sf_dir(sf_dir: str, kind_prefix: str = "") -> None:
     constructed per-example corpora — hypothesis tmp dirs otherwise
     accumulate persisted frames for the whole test session — and for
     benches that must re-measure a COLD build instead of the cached
-    read-back (round-9 ADVICE on tools/patch_sf_split.py).
+    read-back (round-9 ADVICE).
 
     Also evicts the corpus score broadcast ``similarity._SCORE_BCAST_CACHE``
     keyed ``(applicationId, sf_dir)`` (round-12 ADVICE: a corpus rewritten

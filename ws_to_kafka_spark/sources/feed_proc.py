@@ -1,5 +1,5 @@
-"""Subprocess feed reader for ``websocket_multi`` (round-10 VERDICT
-item 6 — multi-socket ingest scaling).
+"""Subprocess feed reader: the connection owner behind both WebSocket
+sources (``websocket`` and ``websocket_multi``).
 
 One OS process per WebSocket connection: the GIL-bound per-frame work —
 ws frame parse, unmask, arrival timestamping — runs in this child
@@ -15,10 +15,10 @@ Wire format (child stdout, little-endian):
     body = n_frames x ( [u64 ts_micros_utc][u32 len][payload bytes] )
 
 The child owns the reference connection semantics — dial -> subscribe ->
-read -> redial with backoff, drift-free interval resends — the same
-loop as ``_FeedWorker`` (reference wsclient.hpp:132-168,
-interval_timer.hpp:23-38); the parent side (`websocket.py`) only moves
-opaque byte batches, and executors unpack frames in parallel.
+read -> redial with backoff, drift-free interval resends (reference
+wsclient.hpp:132-168, interval_timer.hpp:23-38); this is the only copy
+of that loop. The parent side (`_ProcFeedWorker` in `websocket.py`) only
+moves opaque byte batches, and `_FeedBlobSlice` unpacks them to Arrow.
 """
 
 from __future__ import annotations
@@ -30,12 +30,6 @@ import threading
 import time
 
 _FLUSH_SECONDS = 0.015
-
-#: Below this many frames per flush the plain per-frame pack loop wins
-#: (numpy's fixed per-call overhead exceeds a handful of struct.packs);
-#: above it the vectorized path is strictly faster. Both produce
-#: byte-identical wire output (pinned in tests/test_streaming.py).
-_PACK_VEC_MIN = 32
 
 #: Wire header per frame: [u64 ts_micros_utc][u32 len], little-endian,
 #: packed (itemsize 12 — numpy structured dtypes are unaligned unless
@@ -56,16 +50,12 @@ def pack_frames(frames: list) -> bytes:
     guide §4.2) and the interleave [hdr0, p0, hdr1, p1, ...] is ONE
     C-level ``bytes.join`` — per frame the Python interpreter touches
     two list slots and a memoryview slice, not a pack call and a
-    payload-sized concat copy. Small flushes (idle feeds) keep the
-    plain loop: numpy's fixed call overhead loses below ~32 frames.
+    payload-sized concat copy. The output is byte-identical to a
+    per-frame ``struct.pack`` loop (pinned in tests/test_streaming.py).
     """
-    n = len(frames)
-    if n < _PACK_VEC_MIN:
-        return b"".join(
-            struct.pack("<QI", ts, len(p)) + p for ts, p in frames
-        )
     import numpy as np
 
+    n = len(frames)
     hdr = np.empty(n, dtype=_HDR_DTYPE)
     hdr["ts"] = np.fromiter((t for t, _ in frames), dtype=np.uint64, count=n)
     hdr["len"] = np.fromiter(

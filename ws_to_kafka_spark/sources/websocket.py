@@ -25,24 +25,37 @@ a WebSocket is not replayable, so offsets only bound microbatches —
 better than the reference, which loses everything in flight), and frames
 arriving while disconnected are lost on both systems.
 
-Scale note: one WebSocket connection is inherently ONE input partition
-(the reference is likewise single-connection, ``wsclient.hpp:38-53``);
-parallelism comes from running one source per stream/topic and from
-everything downstream of the source exchange. The simple-reader variant
-buffers on the driver, which is exactly where a single ordered socket
-must serialize anyway. For sharded feeds, ``websocket_multi`` (below)
-runs N connections and plans N input partitions per microbatch —
-per-feed frame order is preserved within its partition and downstream
-map work runs N-wide with no exchange.
+One connection owner, two Spark adapters. Every connection is a
+`feed_proc` child process (dial, subscribe, read, redial, interval
+timer) pumped by a `_ProcFeedWorker` in the reader's planner process,
+and every frame reaches Arrow through `_FeedBlobSlice`. Two readers sit
+on top:
+
+* ``websocket`` (`WebSocketStreamReader`, the reader `start_pipeline`
+  uses): a simple reader over one feed. Spark's prefetch runner calls
+  ``read()`` in the planner process and the Arrow batches travel with
+  the plan.
+* ``websocket_multi`` (`MultiWebSocketStreamReader`): N feeds planned as
+  N input partitions per micro-batch, unpacked on executors; per-feed
+  frame order holds within each partition.
+
+Both stay because their per-micro-batch cost differs. Running the
+pipeline on ``websocket_multi`` with one feed (perfbench ws_live, 20k
+frames/s, 4-core host, Spark 4.1.2) moved frame latency p50 from 189 to
+583-595 ms, p95 from 263 to 751-800 ms and set-up from 32 to 45 s;
+``addBatch`` p50 went from 69 to 349 ms. The executor read of a ~9k-frame
+batch took 6-20 ms of that: the partitioned Python-source path pays a
+fixed 235-330 ms per micro-batch before its task reaches the Python
+worker, which the simple reader's prefetch path avoids. One connection is
+one ordered stream anyway (the reference is single-connection too,
+``wsclient.hpp:38-53``), so the simple reader gives up no parallelism.
 """
 
 from __future__ import annotations
 
 import json
 import threading
-import time
 from collections import deque
-from dataclasses import dataclass
 from datetime import datetime, timedelta, timezone
 
 #: Epoch anchor for exact integer micros -> datetime conversion
@@ -62,7 +75,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from .ws_client import RECONNECT_DELAY_S, WsClient, WsError
+from .ws_client import RECONNECT_DELAY_S
 
 # value is BINARY, not string: the reference forwards frame bytes verbatim
 # (src/main.cpp:48-50 hands the payload pointer straight to
@@ -73,172 +86,24 @@ from .ws_client import RECONNECT_DELAY_S, WsClient, WsError
 _SCHEMA_DDL = "value binary, ws_timestamp timestamp"
 
 
-@dataclass
-class _Record:
-    index: int
-    value: bytes
-    ts: datetime
-
-
-class _FeedWorker:
-    """Background connection owner: dial → subscribe → read → buffer,
-    redialing forever on error (the reference's Start() loop)."""
-
-    def __init__(
-        self,
-        url: str,
-        subscribe: str | None,
-        interval_seconds: float,
-        interval_messages: tuple[str, ...],
-        reconnect_delay: float = RECONNECT_DELAY_S,
-        retention: int = 100_000,
-    ):
-        self._url = url
-        self._subscribe = subscribe
-        self._interval = interval_seconds
-        self._interval_messages = interval_messages
-        self._reconnect_delay = reconnect_delay
-        self._buffer: deque[_Record] = deque(maxlen=retention)
-        self._lock = threading.Lock()
-        self._next_index = 0
-        self._stop = threading.Event()
-        self._client: WsClient | None = None
-        self._reader_thread: threading.Thread | None = None
-        self._timer_thread: threading.Thread | None = None
-
-    # -- lifecycle ----------------------------------------------------------
-
-    def start(self) -> None:
-        self._reader_thread = threading.Thread(
-            target=self._run, name="ws-feed", daemon=True
-        )
-        self._reader_thread.start()
-        if self._interval > 0 and self._interval_messages:
-            self._timer_thread = threading.Thread(
-                target=self._run_timer, name="ws-interval", daemon=True
-            )
-            self._timer_thread.start()
-
-    def stop(self) -> None:
-        self._stop.set()
-        client, self._client = self._client, None
-        if client is not None:
-            try:
-                client.close()
-            except Exception:
-                pass
-
-    def _run(self) -> None:
-        """Reference Start() semantics: infinite dial loop, 5 s backoff,
-        re-subscribe after every reconnect (wsclient.hpp:132-168). A CLEAN
-        server close also redials: the reference's while(keep_running_)
-        wraps the whole connect+run sequence, so only Shutdown() ends it —
-        the feed is expected to be persistent."""
-        while not self._stop.is_set():
-            client = WsClient(self._url)
-            try:
-                client.connect()
-                if self._subscribe:
-                    client.send(self._subscribe)
-                self._client = client
-                for payload in client.frames():
-                    self._append(payload)
-                    if self._stop.is_set():
-                        break
-            except WsError:
-                pass
-            finally:
-                self._client = None
-                client.close_socket()
-            if not self._stop.is_set():
-                self._stop.wait(self._reconnect_delay)
-
-    def _run_timer(self) -> None:
-        """Drift-free fixed-rate resend (interval_timer.hpp:23-38:
-        deadline += interval, never now + interval)."""
-        deadline = time.monotonic() + self._interval
-        while not self._stop.wait(max(0.0, deadline - time.monotonic())):
-            deadline += self._interval
-            client = self._client
-            if client is None:
-                continue  # disconnected — reference drops the tick too
-            # All frame writes — these interval messages, the reader
-            # thread's pong/ping replies, stop()'s close — serialize on
-            # WsClient's internal write lock.
-            for msg in self._interval_messages:
-                try:
-                    client.send(msg)
-                except WsError:
-                    break  # write failure is logged-and-dropped in the ref
-
-    # -- buffer -------------------------------------------------------------
-
-    def _append(self, payload: bytes) -> None:
-        rec = _Record(
-            index=self._next_index,
-            value=bytes(payload),  # byte-faithful (main.cpp:48-50 parity)
-            ts=datetime.now(timezone.utc),
-        )
-        with self._lock:
-            self._next_index += 1
-            self._buffer.append(rec)
-
-    def snapshot(self, start_index: int) -> tuple[list[_Record], int]:
-        """Records with index >= start_index, plus the next offset."""
-        with self._lock:
-            records = [r for r in self._buffer if r.index >= start_index]
-            return records, self._next_index
-
-    def peek(self) -> tuple[int, int]:
-        """(next_index, oldest retained index) — the uniform surface
-        shared with `_ProcFeedWorker` for offset planning."""
-        with self._lock:
-            lo = self._buffer[0].index if self._buffer else self._next_index
-            return self._next_index, lo
-
-    def jump(self, start: int) -> None:
-        with self._lock:
-            if start > self._next_index:
-                self._next_index = start
-
-    def between(self, start_index: int, end_index: int) -> list[_Record]:
-        with self._lock:
-            return [r for r in self._buffer if start_index <= r.index < end_index]
-
-    def prune(self, end_index: int) -> None:
-        with self._lock:
-            while self._buffer and self._buffer[0].index < end_index:
-                self._buffer.popleft()
-
-
-class _BatchRec:
-    """One child-process flush: ``n`` frames packed in ``body`` (see
-    feed_proc wire format), numbered [index, index+n)."""
-
-    __slots__ = ("index", "n", "body")
-
-    def __init__(self, index: int, n: int, body: bytes):
-        self.index = index
-        self.n = n
-        self.body = body
-
-
 class _ProcFeedWorker:
-    """Process-isolated connection owner (round-10): the socket + frame
-    decode live in a `feed_proc` child process on its own core; this
+    """The connection owner: the socket, frame decode and interval timer
+    live in a `feed_proc` child process on its own core; this
     driver-side shell pumps length-prefixed batches off the pipe —
-    O(1) Python work per BATCH — and serves the same peek/between/
-    prune/jump surface as the thread-mode `_FeedWorker`.  Four sockets
-    through the round-9 thread design totalled 0.93x ONE socket (GIL);
-    per-frame work now runs N-wide in children and executors."""
+    O(1) Python work per BATCH — into a retention buffer of
+    ``(first_index, n_frames, body)`` entries, and serves
+    peek/batches_between/prune/jump to both readers. A child that dies
+    is respawned; frame numbering continues from ``first_index``
+    (the resume offset on a checkpoint restart, else 0)."""
 
-    def __init__(self, cfg: dict, retention: int = 100_000):
+    def __init__(self, cfg: dict, retention: int = 100_000,
+                 first_index: int = 0):
         self._cfg = dict(cfg)
         self._retention = retention
-        self._buffer: deque[_BatchRec] = deque()
+        self._buffer: deque[tuple[int, int, bytes]] = deque()
         self._n_buffered = 0
         self._lock = threading.Lock()
-        self._next_index = 0
+        self._next_index = first_index
         self._stop = threading.Event()
         self._proc = None
         self._pump_thread: threading.Thread | None = None
@@ -274,6 +139,8 @@ class _ProcFeedWorker:
             except Exception:
                 pass
 
+        # stderr is inherited: the child's redial-loop tracebacks (at
+        # most one per backoff) land in the reader process's log
         proc = subprocess.Popen(
             [
                 _sys.executable,
@@ -282,7 +149,6 @@ class _ProcFeedWorker:
                 json.dumps(self._cfg),
             ],
             stdout=subprocess.PIPE,
-            stderr=subprocess.DEVNULL,
             env=env,
             preexec_fn=_die_with_parent,
         )
@@ -320,17 +186,14 @@ class _ProcFeedWorker:
                 if body is None or len(body) < nbytes:
                     break
                 with self._lock:
-                    self._buffer.append(
-                        _BatchRec(self._next_index, nframes, body)
-                    )
+                    self._buffer.append((self._next_index, nframes, body))
                     self._next_index += nframes
                     self._n_buffered += nframes
                     while (
                         len(self._buffer) > 1
                         and self._n_buffered > self._retention
                     ):
-                        dropped = self._buffer.popleft()
-                        self._n_buffered -= dropped.n
+                        self._n_buffered -= self._buffer.popleft()[1]
             # child died unexpectedly: the reference's persistent-feed
             # contract says redial forever; frame numbering continues.
             if not self._stop.is_set():
@@ -352,29 +215,30 @@ class _ProcFeedWorker:
         except Exception:
             pass
 
-    # -- the reader-facing surface (shared with _FeedWorker) ---------------
+    # -- the reader-facing surface ------------------------------------------
 
     def peek(self) -> tuple[int, int]:
         """(next_index, oldest retained index)."""
         with self._lock:
-            lo = self._buffer[0].index if self._buffer else self._next_index
+            lo = self._buffer[0][0] if self._buffer else self._next_index
             return self._next_index, lo
 
-    def batches_between(self, start: int, end: int) -> list[_BatchRec]:
+    def batches_between(self, start: int, end: int) -> list[tuple]:
+        """Retained batches holding any frame of [start, end)."""
+        if end <= start:
+            return []
         with self._lock:
             return [
-                r
-                for r in self._buffer
-                if r.index < end and r.index + r.n > start
+                b for b in self._buffer if b[0] < end and b[0] + b[1] > start
             ]
 
     def prune(self, end_index: int) -> None:
         with self._lock:
+            # drop batches whose every frame lies below end_index
             while self._buffer and (
-                self._buffer[0].index + self._buffer[0].n <= end_index
+                self._buffer[0][0] + self._buffer[0][1] <= end_index
             ):
-                dropped = self._buffer.popleft()
-                self._n_buffered -= dropped.n
+                self._n_buffered -= self._buffer.popleft()[1]
 
     def jump(self, start: int) -> None:
         with self._lock:
@@ -387,50 +251,28 @@ class _ProcFeedWorker:
         self._reap(proc)
 
 
-#: Rows per pyarrow RecordBatch handed to the prefetch runner — bounds
-#: the allocation of a post-restart drain batch (the runner does NOT
-#: re-slice RecordBatches the way it batches tuple iterators).
-_ARROW_CHUNK_ROWS = 20_000
-
-_ARROW_SCHEMA = None  # lazily built per process (import cost)
-
-
-def _records_to_batches(records):
-    """(value, ts) records → list of pyarrow RecordBatches matching the
-    runner's to_arrow_schema(_SCHEMA_DDL) exactly."""
-    global _ARROW_SCHEMA
-    import pyarrow as pa
-
-    if _ARROW_SCHEMA is None:
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import (  # DDL parse needs a live context;
-            BinaryType,                  # the runner process has none
-            StructField,
-            StructType,
-            TimestampType,
-        )
-
-        _ARROW_SCHEMA = to_arrow_schema(
-            StructType(
-                [
-                    StructField("value", BinaryType()),
-                    StructField("ws_timestamp", TimestampType()),
-                ]
-            )
-        )
-    out = []
-    for lo in range(0, len(records), _ARROW_CHUNK_ROWS):
-        chunk = records[lo:lo + _ARROW_CHUNK_ROWS]
-        out.append(
-            pa.RecordBatch.from_arrays(
-                [
-                    pa.array([r.value for r in chunk], type=_ARROW_SCHEMA[0].type),
-                    pa.array([r.ts for r in chunk], type=_ARROW_SCHEMA[1].type),
-                ],
-                schema=_ARROW_SCHEMA,
-            )
-        )
-    return out
+def _start_worker(
+    opts: dict, url: str, subscribe: str | None, first_index: int = 0
+) -> _ProcFeedWorker:
+    """One started connection owner configured from source options."""
+    parsed = json.loads(opts.get("interval_messages") or "[]")
+    worker = _ProcFeedWorker(
+        {
+            "url": url,
+            "subscribe": subscribe,
+            "interval": float(opts.get("interval", 0) or 0),
+            "interval_messages": [
+                m if isinstance(m, str) else json.dumps(m) for m in parsed
+            ],
+            "reconnect_delay": float(
+                opts.get("reconnect_delay", RECONNECT_DELAY_S)
+            ),
+        },
+        retention=int(opts.get("retention", 100_000)),
+        first_index=first_index,
+    )
+    worker.start()
+    return worker
 
 
 class WebSocketStreamReader(SimpleDataSourceStreamReader):
@@ -440,17 +282,18 @@ class WebSocketStreamReader(SimpleDataSourceStreamReader):
     prefetch runner process, which calls ``read()`` and OWNS the live
     connection, and (b) executors, which only ever call
     ``readBetweenOffsets`` as a cache-miss fallback. The live worker
-    (threads, socket, locks) is therefore started LAZILY on first
-    ``read()`` and excluded from pickles; an executor copy without a
-    worker answers the fallback with an empty replay — the reference's
-    at-most-once (SURVEY.md §2.1), never a second competing connection.
+    (pump thread, `feed_proc` child, locks) is therefore started LAZILY
+    on first ``read()`` and excluded from pickles; an executor copy
+    without a worker answers the fallback with an empty replay — the
+    reference's at-most-once (SURVEY.md §2.1), never a second competing
+    connection.
     """
 
     def __init__(self, options: dict):
         if not options.get("url"):
             raise ValueError("websocket source requires an 'url' option")
         self._options = dict(options)
-        self._worker: _FeedWorker | None = None
+        self._worker: _ProcFeedWorker | None = None
 
     def __getstate__(self) -> dict:
         return {"_options": self._options}
@@ -459,22 +302,9 @@ class WebSocketStreamReader(SimpleDataSourceStreamReader):
         self._options = state["_options"]
         self._worker = None
 
-    def _ensure_worker(self, base_index: int = 0) -> _FeedWorker:
+    def _ensure_worker(self, base_index: int = 0) -> _ProcFeedWorker:
         if self._worker is None:
             opts = self._options
-            parsed = json.loads(opts.get("interval_messages") or "[]")
-            self._worker = _FeedWorker(
-                url=opts["url"],
-                subscribe=opts.get("subscribe"),
-                interval_seconds=float(opts.get("interval", 0) or 0),
-                interval_messages=tuple(
-                    m if isinstance(m, str) else json.dumps(m) for m in parsed
-                ),
-                reconnect_delay=float(
-                    opts.get("reconnect_delay", RECONNECT_DELAY_S)
-                ),
-                retention=int(opts.get("retention", 100_000)),
-            )
             # Checkpoint-restart: the engine resumes from committed offset N,
             # but a socket cannot replay — a fresh worker numbering from 0
             # would have its first N frames treated as already-consumed and
@@ -483,17 +313,22 @@ class WebSocketStreamReader(SimpleDataSourceStreamReader):
             # the reference's semantics (it restarts from scratch,
             # /root/reference/src/wsclient.hpp:158-162 — ours additionally
             # keeps offsets monotonic for the engine's bookkeeping).
-            self._worker._next_index = base_index
-            self._worker.start()
+            self._worker = _start_worker(
+                opts, opts["url"], opts.get("subscribe"), base_index
+            )
         return self._worker
+
+    def _slice(self, start: int, end: int) -> _FeedBlobSlice:
+        return _FeedBlobSlice(
+            0, start, end, self._worker.batches_between(start, end)
+        )
 
     def initialOffset(self) -> dict:
         return {"index": 0}
 
     def read(self, start: dict) -> tuple:
-        records, next_index = self._ensure_worker(start["index"]).snapshot(
-            start["index"]
-        )
+        nxt, lo = self._ensure_worker(start["index"]).peek()
+        first = max(start["index"], lo)
         # Admission control (the kafka maxOffsetsPerTrigger analog): cap
         # rows per microbatch so a burst — or a backlog after restart —
         # drains as several bounded batches instead of one giant one.
@@ -503,22 +338,18 @@ class WebSocketStreamReader(SimpleDataSourceStreamReader):
         # batch actually took. 0 (default) = unlimited, the reference's
         # drain-everything behavior.
         cap = int(self._options.get("max_records_per_batch", 0) or 0)
-        if cap > 0 and len(records) > cap:
-            records = records[:cap]
-            next_index = records[-1].index + 1
-        if not records:
-            return iter(()), {"index": next_index}
-        # Deliver as pyarrow RecordBatches, not per-row tuples (round-12
-        # VERDICT item 5): the prefetch runner's
-        # records_to_arrow_batches yields RecordBatches straight into
-        # the JVM Arrow stream, skipping the per-row converter pipeline
-        # (type-check + field conversion per tuple) that dominated the
-        # per-batch addBatch cost. Arrays are built with the SAME
-        # to_arrow_schema call the runner itself uses, so types (binary,
-        # timestamp[us] with the session tz rule) match exactly; chunks
-        # of _ARROW_CHUNK_ROWS keep a post-restart drain batch from
-        # materializing as one giant allocation.
-        return iter(_records_to_batches(records)), {"index": next_index}
+        if cap > 0:
+            nxt = min(nxt, first + cap)
+        if nxt <= first:
+            return iter(()), {"index": nxt}
+        # Deliver pyarrow RecordBatches, not per-row tuples: the prefetch
+        # runner passes RecordBatches straight into the JVM Arrow stream,
+        # skipping its per-row converter. One RecordBatch per child flush
+        # (~15 ms of frames) bounds each allocation; ``feed_id`` is
+        # dropped to match this source's two-column schema. A list
+        # iterator, because the runner copies it to serve its cache.
+        batches = self._slice(first, nxt).batches_iter()
+        return iter([b.select([0, 1]) for b in batches]), {"index": nxt}
 
     def readBetweenOffsets(self, start: dict, end: dict):
         # Failure recovery: best-effort replay from the retention cache.
@@ -526,8 +357,11 @@ class WebSocketStreamReader(SimpleDataSourceStreamReader):
         # executor copy) this degrades to the reference's at-most-once.
         if self._worker is None:
             return iter(())
-        return iter(
-            (r.value, r.ts) for r in self._worker.between(start["index"], end["index"])
+        return (
+            (value, ts)
+            for value, ts, _ in self._slice(
+                start["index"], end["index"]
+            ).rows_iter()
         )
 
     def commit(self, end: dict) -> None:
@@ -571,23 +405,12 @@ def register_websocket_source(spark) -> None:
 _MULTI_SCHEMA_DDL = "value binary, ws_timestamp timestamp, feed_id int"
 
 
-class _FeedSlice(InputPartition):
-    """One feed's share of a microbatch. InputPartitions are pickled to
-    executors, so the record slice rides inside — the same driver→executor
-    volume the simple reader ships, but landing as N PARALLEL map tasks
-    with no exchange: downstream stateless work (projection, key
-    assignment, sink write) runs N-wide straight off the source."""
-
-    def __init__(self, feed_id: int, rows: list):
-        self.feed_id = feed_id
-        self.rows = rows
-
-
 class _FeedBlobSlice(InputPartition):
-    """One feed's share of a microbatch in PROCESS reader mode: the
-    child's packed batches ride to the executor as opaque bytes and the
-    per-frame unpack (struct walk + timestamp decode) runs THERE — the
-    driver never touches individual frames."""
+    """One feed's frames [start, end) as the child packed them: the only
+    frame-to-Arrow path. ``websocket_multi`` ships it to the executor as
+    opaque bytes and the per-frame unpack (struct walk + timestamp
+    decode) runs THERE; the simple ``websocket`` reader unpacks it in
+    the prefetch runner."""
 
     def __init__(
         self, feed_id: int, start: int, end: int, batches: list[tuple]
@@ -628,7 +451,8 @@ class _FeedBlobSlice(InputPartition):
         the executor unpack per-frame-Python-object bound. Timestamps
         go in as exact int64 epoch micros (the same instants
         rows_iter's timedelta arithmetic produces — the ADVICE-r10
-        exactness pin covers both). rows_iter stays for replay/tests.
+        exactness pin covers both). ``rows_iter`` serves the simple
+        reader's ``readBetweenOffsets`` replay.
 
         Round 13: the per-frame list-append + ``pa.array(list)`` build
         measured 70k frames/s/core in isolation — suspiciously equal to
@@ -669,23 +493,23 @@ class _FeedBlobSlice(InputPartition):
             offsets = np.zeros(m + 1, dtype=np.int64)
             np.cumsum(ln_s, out=offsets[1:])
             total = int(offsets[-1])
-            # value j of frame i lives at body[st_s[i] + (j - offsets[i])]:
-            # one vectorized gather re-packs all payloads contiguously
-            pos = np.repeat(st_s - offsets[:-1], ln_s) + np.arange(
-                total, dtype=np.int64
-            )
-            data = np.frombuffer(body, dtype=np.uint8)[pos]
             # int32 offsets: a child batch body is bounded by the pipe
             # flush cadence (~15 ms of frames), far under 2 GiB — but the
-            # bound is an operating-point assumption, so ENFORCE it: a
-            # silent astype wrap would hand Arrow a corrupt offsets
-            # buffer (garbage rows, no error). Loud failure instead.
+            # bound is an operating-point assumption, so ENFORCE it before
+            # the gather allocates: a silent astype wrap would hand Arrow
+            # a corrupt offsets buffer (garbage rows, no error).
             if total > _BIN_OFFSET_MAX:
                 raise ValueError(
                     f"packed batch payload {total} B exceeds the 2 GiB "
                     "Arrow binary-offset bound (int32); shrink the child "
                     "flush cadence or batch admission cap"
                 )
+            # value j of frame i lives at body[st_s[i] + (j - offsets[i])]:
+            # one vectorized gather re-packs all payloads contiguously
+            pos = np.repeat(st_s - offsets[:-1], ln_s) + np.arange(
+                total, dtype=np.int64
+            )
+            data = np.frombuffer(body, dtype=np.uint8)[pos]
             val_arr = pa.Array.from_buffers(
                 pa.binary(),
                 m,
@@ -736,7 +560,7 @@ def _multi_arrow_schema():
 
 class MultiWebSocketStreamReader(DataSourceStreamReader):
     """N-connection stream reader: each configured url/subscription gets
-    its own `_FeedWorker` (connection + redial loop + retention buffer)
+    its own `_ProcFeedWorker` (child connection + retention buffer)
     and its own entry in the offset vector, and `partitions()` plans one
     input partition per feed per microbatch.
 
@@ -746,15 +570,13 @@ class MultiWebSocketStreamReader(DataSourceStreamReader):
     Real feeds shard (per-symbol subscriptions, per-shard endpoints);
     this source turns that sharding into genuine input parallelism.
 
-    Where the work runs (round-10, ``reader_mode`` option): in the
-    default ``process`` mode each connection lives in a `feed_proc`
-    CHILD PROCESS that decodes frames on its own core and ships packed
-    batches up a pipe; the driver does O(1) work per batch and
-    executors unpack frames in parallel (`_FeedBlobSlice`), so N
-    sockets ingest ~N-wide instead of serializing on the driver's GIL
-    (the round-9 thread mode measured 0.93x ONE socket's rate at four
-    sockets; ``reader_mode=thread`` keeps that in-process variant for
-    spawn-restricted environments). Offset planning stays driver-side
+    Where the work runs: each connection lives in a `feed_proc` CHILD
+    PROCESS that decodes frames on its own core and ships packed batches
+    up a pipe; the planner process does O(1) work per batch and
+    executors unpack frames in parallel (`_FeedBlobSlice`), so N sockets
+    ingest ~N-wide instead of serializing on one interpreter lock (an
+    earlier in-process thread per socket measured 0.93x ONE socket's
+    rate at four sockets). Offset planning stays in the planner
     (latestOffset/partitions/commit — the Python DataSource API gives
     executors no durable state between batches, and a WebSocket cannot
     be re-dialed per batch without dropping frames). The driver is thus
@@ -774,7 +596,7 @@ class MultiWebSocketStreamReader(DataSourceStreamReader):
     def __init__(self, options: dict):
         self._options = dict(options)
         self._specs = self._parse_specs(self._options)
-        self._workers: list[_FeedWorker] | None = None
+        self._workers: list[_ProcFeedWorker] | None = None
         # last offsets this reader PLANNED (returned from latestOffset or
         # seen as an end in partitions). The admission cap must window
         # from here, not from the committed/pruned frontier: the engine
@@ -826,44 +648,12 @@ class MultiWebSocketStreamReader(DataSourceStreamReader):
         self._workers = None
         self._planned = None
 
-    def _ensure_workers(self) -> list:
+    def _ensure_workers(self) -> list[_ProcFeedWorker]:
         if self._workers is None:
-            opts = self._options
-            parsed = json.loads(opts.get("interval_messages") or "[]")
-            msgs = [
-                m if isinstance(m, str) else json.dumps(m) for m in parsed
+            self._workers = [
+                _start_worker(self._options, spec["url"], spec["subscribe"])
+                for spec in self._specs
             ]
-            mode = (opts.get("reader_mode") or "process").lower()
-            self._workers = []
-            for spec in self._specs:
-                if mode == "thread":
-                    w = _FeedWorker(
-                        url=spec["url"],
-                        subscribe=spec["subscribe"],
-                        interval_seconds=float(opts.get("interval", 0) or 0),
-                        interval_messages=tuple(msgs),
-                        reconnect_delay=float(
-                            opts.get("reconnect_delay", RECONNECT_DELAY_S)
-                        ),
-                        retention=int(opts.get("retention", 100_000)),
-                    )
-                else:  # "process" (default): one decode core per socket
-                    w = _ProcFeedWorker(
-                        {
-                            "url": spec["url"],
-                            "subscribe": spec["subscribe"],
-                            "interval": float(opts.get("interval", 0) or 0),
-                            "interval_messages": msgs,
-                            "reconnect_delay": float(
-                                opts.get(
-                                    "reconnect_delay", RECONNECT_DELAY_S
-                                )
-                            ),
-                        },
-                        retention=int(opts.get("retention", 100_000)),
-                    )
-                w.start()
-                self._workers.append(w)
         return self._workers
 
     def initialOffset(self) -> dict:
@@ -891,7 +681,7 @@ class MultiWebSocketStreamReader(DataSourceStreamReader):
         self._planned = list(out)
         return {"feeds": out}
 
-    def partitions(self, start: dict, end: dict) -> list[_FeedSlice]:
+    def partitions(self, start: dict, end: dict) -> list[_FeedBlobSlice]:
         workers = self._ensure_workers()
         # checkpoint restart replays the last planned batch with offsets
         # this fresh reader never returned — fold them into the planned
@@ -911,27 +701,11 @@ class MultiWebSocketStreamReader(DataSourceStreamReader):
                 # docstring.
                 w.jump(s)
                 e = max(e, s)
-            if isinstance(w, _ProcFeedWorker):
-                batches = (
-                    [
-                        (r.index, r.n, r.body)
-                        for r in w.batches_between(s, e)
-                    ]
-                    if e > s
-                    else []
-                )
-                parts.append(_FeedBlobSlice(i, s, e, batches))
-            else:
-                rows = [
-                    (r.value, r.ts, i) for r in w.between(s, e)
-                ] if e > s else []
-                parts.append(_FeedSlice(i, rows))
+            parts.append(_FeedBlobSlice(i, s, e, w.batches_between(s, e)))
         return parts
 
-    def read(self, partition):
-        if isinstance(partition, _FeedBlobSlice):
-            return partition.batches_iter()
-        return iter(partition.rows)
+    def read(self, partition: _FeedBlobSlice):
+        return partition.batches_iter()
 
     def commit(self, end: dict) -> None:
         if self._workers is None:
